@@ -56,6 +56,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.fs import join as fs_join
+from solr_map_reduce_spark.indexing import read_parquet_pinned
 
 ANN_DIR = "_ann"
 ANN_META = "_ANN_META.json"
@@ -507,10 +508,7 @@ def _dot_route_stats(spark: SparkSession, side: str, ivf) -> "dict | None":
     them).  ``None`` when the corpus holds no vectors."""
     from solr_map_reduce_spark.extensions.similarity import _as_double, l2_norm
 
-    reader = spark.read
-    if ivf.vectors_schema:
-        reader = reader.schema(StructType.fromJson(ivf.vectors_schema))
-    rows = reader.parquet(fs_join(side, "vectors"))
+    rows = read_parquet_pinned(spark, fs_join(side, "vectors"), ivf.vectors_schema)
     nrm = l2_norm(_as_double(F.col(ivf.vec_col)))
     got = (
         rows.filter(
@@ -774,10 +772,7 @@ def _read_tombstones(
         (f for f in StructType.fromJson(pinned).fields if f.name == key),
         None,
     ) if pinned else None
-    reader = spark.read
-    if kf is not None:
-        reader = reader.schema(_tombstone_schema(kf))
-    return reader.parquet(tomb_path)
+    return read_parquet_pinned(spark, tomb_path, kf and _tombstone_schema(kf))
 
 
 def _apply_liveness(rows: DataFrame, tombstones: DataFrame, key: str) -> DataFrame:
@@ -847,22 +842,15 @@ def probe_topk(
 
     pinned = index.vectors_schema if kind == "ivf" else index.codes_schema
     sub = "vectors" if kind == "ivf" else "codes"
-    reader = spark.read
-    if pinned:
-        reader = reader.schema(StructType.fromJson(pinned))
-    rows = reader.parquet(fs_join(side, sub)).filter(
+    rows = read_parquet_pinned(spark, fs_join(side, sub), pinned).filter(
         F.col(ivf.bucket_col).isin(probe)
     ).withColumn(EPOCH_COL, F.lit(0).cast("long"))
 
     delta_path = fs_join(side, DELTA)
     if fs.exists(delta_path):
-        dschema = _with_epoch_field(pinned)
-        dreader = spark.read
-        if dschema is not None:
-            dreader = dreader.schema(dschema)
-        delta = dreader.parquet(delta_path).filter(
-            F.col(ivf.bucket_col).isin(probe)
-        )
+        delta = read_parquet_pinned(
+            spark, delta_path, _with_epoch_field(pinned)
+        ).filter(F.col(ivf.bucket_col).isin(probe))
         rows = rows.unionByName(delta.select(rows.columns))
 
     tomb = _read_tombstones(spark, fs, side, pinned, key)
@@ -1115,17 +1103,12 @@ def compact(spark: SparkSession, index_path: str, field: str) -> dict:
         meta["built_generation"] = "__compacting__"
         write_meta(fs, side, meta)  # belt + braces while we rewrite
 
-        reader = spark.read
-        if pinned:
-            reader = reader.schema(StructType.fromJson(pinned))
-        base = reader.parquet(fs_join(side, sub))
+        base = read_parquet_pinned(spark, fs_join(side, sub), pinned)
         delta = None
         if has_delta:
-            dreader = spark.read
-            ds = _with_epoch_field(pinned)
-            if ds is not None:
-                dreader = dreader.schema(ds)
-            delta = dreader.parquet(fs_join(side, DELTA))
+            delta = read_parquet_pinned(
+                spark, fs_join(side, DELTA), _with_epoch_field(pinned)
+            )
         tomb = _read_tombstones(spark, fs, side, pinned, key)
 
         affected = set()

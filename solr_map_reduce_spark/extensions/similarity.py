@@ -25,6 +25,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
+from solr_map_reduce_spark.indexing import read_parquet_pinned
+
 
 def _as_double(col: F.Column) -> F.Column:
     return col.cast(T.ArrayType(T.DoubleType()))
@@ -843,7 +845,7 @@ class IvfIndex:
         fs.write_text(fs_join(path, self.ABSORBED_TAGS), json.dumps(sorted(tags)))
         stage = fs_join(path, "vectors__compact")
         (
-            spark.read.parquet(vectors)
+            read_parquet_pinned(spark, vectors, self.vectors_schema)
             .repartition(self.bucket_col)  # whole buckets per task: one
             .write.mode("overwrite")       # file per bucket directory
             .partitionBy(self.bucket_col)
@@ -884,12 +886,9 @@ class IvfIndex:
         AQE broadcasts the typically-small exclusion set."""
         from solr_map_reduce_spark.fs import join as fs_join
 
-        reader = spark.read
-        if self.vectors_schema:
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(self.vectors_schema))
-        assigned = reader.parquet(fs_join(path, "vectors"))
+        assigned = read_parquet_pinned(
+            spark, fs_join(path, "vectors"), self.vectors_schema
+        )
         if exclude is not None:
             assigned = assigned.join(exclude, on=self.id_col, how="left_anti")
         return self.search(
@@ -1448,14 +1447,9 @@ class IvfPqIndex:
         q = np.asarray(query, dtype=np.float64)
         d = ((self.ivf.centroids - q[None, :]) ** 2).sum(axis=1)
         probe = [int(b) for b in d.argsort()[:nprobe]]
-        reader = spark.read
-        if self.codes_schema:
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType.fromJson(self.codes_schema))
-        codes = reader.parquet(fs_join(path, "codes")).filter(
-            F.col(self.ivf.bucket_col).isin(probe)
-        )
+        codes = read_parquet_pinned(
+            spark, fs_join(path, "codes"), self.codes_schema
+        ).filter(F.col(self.ivf.bucket_col).isin(probe))
         if exclude is not None:
             codes = codes.join(exclude, on=self.ivf.id_col, how="left_anti")
         return self.pq.topk(

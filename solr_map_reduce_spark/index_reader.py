@@ -28,7 +28,9 @@ from collections.abc import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from solr_map_reduce_spark.indexing import MANIFEST, SHARD_COL, read_index
+from solr_map_reduce_spark.indexing import (
+    MANIFEST, SHARD_COL, manifest_schema, read_index, read_parquet_pinned,
+)
 from solr_map_reduce_spark.operators.routing import ShardRouter
 
 
@@ -282,17 +284,8 @@ class SearchIndex:
         return self.df().columns
 
     def _read_schema(self):
-        import pyspark.sql.types as T
-
-        if self._schema_memo is not None:
-            return self._schema_memo
-        sj = self.manifest.get("schema_json")
-        if sj:
-            st = T.StructType.fromJson(json.loads(sj))
-            if set(st.fieldNames()) == set(self.columns):
-                self._schema_memo = T.StructType([st[c] for c in self.columns])
-                return self._schema_memo
-        self._schema_memo = self.df().schema
+        if self._schema_memo is None:
+            self._schema_memo = manifest_schema(self.manifest) or self.df().schema
         return self._schema_memo
 
     def _files_df(self, cands: list[tuple[int, str]] | None) -> DataFrame | None:
@@ -300,11 +293,11 @@ class SearchIndex:
 
         if cands is None:
             return None
-        if not cands:  # no segment can hold any admitted key
-            return self.spark.createDataFrame([], self._read_schema())
+        # no candidate (no segment can hold a key) reads as 0 rows
         paths = [fs_join(self.path, f"{SHARD_COL}={s}", f) for s, f in cands]
-        out = self.spark.read.option("basePath", self.path).parquet(*paths)
-        return out.select(self.columns)
+        return read_parquet_pinned(
+            self.spark, paths, self._read_schema(), base_path=self.path
+        ).select(self.columns)
 
     def key_range(self, lo=None, hi=None) -> DataFrame:
         """Contiguous key scan ``lo <= key <= hi`` (either bound None =
@@ -2383,8 +2376,8 @@ class SearchIndex:
         from solr_map_reduce_spark.fs import join as fs_join
         from solr_map_reduce_spark.search_stats import _VOCAB_SCHEMA, VOCAB_DIR
 
-        vocab = self.spark.read.schema(_VOCAB_SCHEMA).parquet(
-            fs_join(self.path, f"{VOCAB_DIR}/{fname}")
+        vocab = read_parquet_pinned(
+            self.spark, fs_join(self.path, f"{VOCAB_DIR}/{fname}"), _VOCAB_SCHEMA
         )
         n = len(needle)
         rows = (
@@ -3560,14 +3553,14 @@ class SearchIndex:
         column.  Every dictionary-shaped component (term_facet, suggest,
         spellcheck, terms) serves from this."""
         from solr_map_reduce_spark.fs import join as fs_join
-        from solr_map_reduce_spark.search_stats import VOCAB_DIR
+        from solr_map_reduce_spark.search_stats import _VOCAB_SCHEMA, VOCAB_DIR
 
         analyzed: dict = self.manifest.get("analyzed", {})
         fname = field or (next(iter(analyzed)) if len(analyzed) == 1 else None)
         stats = self._load_stats()
         if stats and fname in stats:
-            vocab = self.spark.read.parquet(
-                fs_join(self.path, f"{VOCAB_DIR}/{fname}")
+            vocab = read_parquet_pinned(
+                self.spark, fs_join(self.path, f"{VOCAB_DIR}/{fname}"), _VOCAB_SCHEMA
             ).select("term", "df")  # drop the bucket partition column
             return fname, vocab
         tokens_col = self._tokens_col(fname)

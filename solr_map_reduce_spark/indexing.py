@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from solr_map_reduce_spark.fs import get_fs
 from solr_map_reduce_spark.fs import join as fs_join
@@ -529,6 +530,7 @@ class IndexJob:
                 "run the same IndexJob config over inputs with the "
                 "artifact's columns (the reference reruns the same job)"
             )
+        prepared = _conform(prepared, current.schema)
         merged = current.select(prepared.columns).unionByName(prepared)
         cfg = self.config
         if (
@@ -591,7 +593,8 @@ class IndexJob:
             stats_stored = fs.exists(fs_join(path, STATS))
             if stats_stored:
                 stats_finalize = prepare_stats_delta(
-                    df.sparkSession, path, current, df.sparkSession.read.parquet(tmp)
+                    df.sparkSession, path, current,
+                    read_parquet_pinned(df.sparkSession, tmp, resolved.schema),
                 )
             # ANN delta maintenance: the batch keys + their POST-RESOLUTION
             # rows (the resolver's winner is what must serve, whichever
@@ -607,7 +610,9 @@ class IndexJob:
                     prepared.select(key).distinct()
                     .localCheckpoint(eager=True)
                 )
-                staged_rows = df.sparkSession.read.parquet(tmp)
+                staged_rows = read_parquet_pinned(
+                    df.sparkSession, tmp, resolved.schema
+                )
                 cols = [key] + [
                     f for f in ann_fields if f in staged_rows.columns
                 ]
@@ -872,6 +877,7 @@ class IndexJob:
                 F.col(SHARD_COL),
             )
             updated = updated.unionByName(full)
+        updated = _conform(updated, current.schema)
         # re-analyze stored token arrays for updated analyzed fields (the
         # analyzer is deterministic, so recomputing unmatched rows too is a
         # no-op — keeps the plan one narrow projection over touched shards)
@@ -909,7 +915,8 @@ class IndexJob:
             stats_stored = fs.exists(fs_join(path, STATS))
             if stats_stored:
                 stats_finalize = prepare_stats_delta(
-                    spark, path, current, spark.read.parquet(tmp)
+                    spark, path, current,
+                    read_parquet_pinned(spark, tmp, updated.schema),
                 )
             # ANN delta: only sidecars whose vector column is among the
             # updated columns need epoch maintenance (others re-pin below
@@ -929,7 +936,7 @@ class IndexJob:
                     .localCheckpoint(eager=True)
                 )
                 ann_upserted = (
-                    spark.read.parquet(tmp)
+                    read_parquet_pinned(spark, tmp, updated.schema)
                     .select(key, *vec_updated)
                     .join(ann_keys, on=key, how="left_semi")
                     .localCheckpoint(eager=True)
@@ -1286,36 +1293,52 @@ def _swap_shard_dirs(
     fs.delete(trash)
 
 
+def _conform(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` cast to the stored ``schema``'s column types: a shard rewrite
+    must not drift its files' physical types off the manifest schema that
+    every read pins (a double batch into a long column would)."""
+    return df.select(*[F.col(c).cast(schema[c].dataType).alias(c) for c in df.columns])
+
+
+def manifest_schema(manifest: dict | None) -> StructType | None:
+    """The artifact's read schema, ordered ``columns + [shard]``, from the
+    manifest's persisted ``schema_json`` (the schema.xml analog: fixed and
+    external, never re-derived from segment files).  None when the
+    manifest has none (legacy) or its field set disagrees with
+    ``columns`` — readers then infer from the footers."""
+    sj = (manifest or {}).get("schema_json")
+    if not sj:
+        return None
+    cols = list(manifest.get("columns") or []) + [SHARD_COL]
+    st = StructType.fromJson(json.loads(sj))
+    if set(st.fieldNames()) != set(cols):
+        return None
+    return StructType([st[c] for c in cols])
+
+
+def read_parquet_pinned(
+    spark: SparkSession, paths, schema, base_path: str | None = None
+) -> DataFrame:
+    """``spark.read.parquet`` with ``schema`` pinned — a StructType, a DDL
+    string or a ``StructType.jsonValue()`` dict: planning opens no footer,
+    so no schema-inference Spark job runs, and a dataless directory reads
+    as 0 rows.  A None/empty ``schema`` infers."""
+    if isinstance(schema, dict):
+        schema = StructType.fromJson(schema)
+    reader = spark.read.schema(schema) if schema else spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    return reader.parquet(*([paths] if isinstance(paths, str) else paths))
+
+
 def read_index(spark: SparkSession, path: str) -> DataFrame:
     """Open the artifact; ``shard`` is a partition column → pruning works.
-
-    An empty artifact (zero input rows → no parquet files) can't infer a
-    schema; the manifest's persisted schema backs an empty DataFrame so
-    every read-side op still works."""
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        fs = get_fs(path, spark)
-        manifest_path = fs_join(path, MANIFEST)
-        if not fs.exists(manifest_path):
-            raise
-        # the empty-DataFrame fallback is ONLY for a genuinely dataless
-        # artifact (zero input rows wrote no parquet files).  If any shard
-        # dir holds data files, the read failed for a real reason (corrupt
-        # footer, transient IO) — surface it; returning empty would make
-        # queries silently report zero rows
-        for entry in fs.listdir(path):
-            full = fs_join(path, entry)
-            if entry.startswith(f"{SHARD_COL}=") and fs.isdir(full):
-                if any(f.endswith(".parquet") for f in fs.listdir(full)):
-                    raise
-        manifest = json.loads(fs.read_text(manifest_path))
-        schema_json = manifest.get("schema_json")
-        if not schema_json:
-            raise
-        import pyspark.sql.types as T
-
-        return spark.createDataFrame([], T.StructType.fromJson(json.loads(schema_json)))
+    The manifest's schema is pinned (an empty artifact reads as 0 rows);
+    an artifact without one infers it from the footers."""
+    fs = get_fs(path, spark)
+    mpath = fs_join(path, MANIFEST)
+    manifest = json.loads(fs.read_text(mpath)) if fs.exists(mpath) else None
+    return read_parquet_pinned(spark, path, manifest_schema(manifest))
 
 
 def compact(

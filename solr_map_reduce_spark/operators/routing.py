@@ -331,55 +331,63 @@ class ShardRouter:
         return root * per_shard + ((h & INT_MAX) % per_shard)
 
 
+def micro_shards_arrow(ids: pa.Array, router: ShardRouter) -> pa.Array:
+    """The kernel of :func:`shard_id_column`: int32 micro shard per key of
+    one Arrow string batch, bit-identical to ``router.micro_shard_of``.
+
+    Null/type parity with the pandas predecessor: a NULL key hashed as the
+    string "None" (pandas astype(str)), non-string inputs as their string
+    rendering (all library callers cast JVM-side)."""
+    if isinstance(ids, pa.ChunkedArray):
+        ids = ids.combine_chunks()
+    if not pa.types.is_large_string(ids.type):
+        ids = ids.cast(pa.large_string())
+    if ids.null_count:
+        ids = ids.fill_null("None")
+    raw = murmur3_x86_32_arrow(ids).astype(np.int64)
+    hashes = raw
+    # composite "shard!doc" ids (rare): '!' is 0x21, a single UTF-8 byte
+    # that never occurs inside a multi-byte sequence, so one vectorized
+    # scan of the batch's bytes flags it; only then are the affected rows
+    # materialized for the spliced hash.  The scan covers only
+    # [offsets[0], offsets[-1]): a SLICED array's data buffer also holds
+    # bytes of rows outside the slice.  The root shard uses the
+    # composite-spliced hash; the within-shard offset always uses the
+    # full-key murmur3 (the raw batch hash), matching micro_shard_of.
+    offsets, flat = _utf8_flat(ids)
+    lo = int(offsets[0])
+    bang = lo + np.flatnonzero(flat[lo : int(offsets[-1])] == 0x21)
+    if bang.size:
+        rows = np.unique(np.searchsorted(offsets, bang, side="right") - 1)
+        hashes = raw.copy()
+        fixes = [composite_id_hash(ids[int(i)].as_py()) for i in rows]
+        hashes[rows] = np.array(fixes, dtype=np.int64)
+    starts = np.array([r[0] for r in router._ranges], dtype=np.int64)
+    per_shard = router.partitions // router.shards
+    roots = np.searchsorted(starts, hashes, side="right") - 1
+    micro = roots * per_shard + ((raw & INT_MAX) % per_shard)
+    return pa.array(micro.astype(np.int32), type=pa.int32())
+
+
 def shard_id_column(key: Column | str, shards: int, num_partitions: int | None = None) -> Column:
     """Column expression: SolrCloud-parity micro-shard id for a key column.
 
     Arrow-NATIVE scalar UDF (the hash is not expressible bit-exactly with
     builtin functions — Spark's ``hash()`` uses seed 42 and a different
-    tail mix).  The kernel reads the Arrow string buffers directly
-    (:func:`murmur3_x86_32_arrow`), so no per-row Python string is ever
-    constructed on the plain-id fast path — the pandas_udf predecessor
-    materialized every key as a Python str on both the Arrow→pandas and
-    the ``astype(str)``/``str.contains`` steps (r14, guide §4.1/§4.3).
-    Returns int32.
+    tail mix).  The kernel (:func:`micro_shards_arrow`) reads the Arrow
+    string buffers directly (:func:`murmur3_x86_32_arrow`), so no per-row
+    Python string is ever constructed on the plain-id fast path — the
+    pandas_udf predecessor materialized every key as a Python str on both
+    the Arrow→pandas and the ``astype(str)``/``str.contains`` steps (r14,
+    guide §4.1/§4.3).  Returns int32.
     """
     from pyspark.sql.functions import arrow_udf
 
     router = ShardRouter(shards=shards, num_partitions=num_partitions)
-    starts = [r[0] for r in router._ranges]
-    starts_arr = np.array(starts, dtype=np.int64)
-    per_shard = router.partitions // router.shards
 
     @arrow_udf(IntegerType())
     def _route(ids: pa.Array) -> pa.Array:
-        # Null/type parity with the pandas predecessor: a NULL key hashed
-        # as the string "None" (pandas astype(str)), non-string inputs as
-        # their string rendering (all library callers cast JVM-side).
-        if isinstance(ids, pa.ChunkedArray):
-            ids = ids.combine_chunks()
-        if not pa.types.is_large_string(ids.type):
-            ids = ids.cast(pa.large_string())
-        if ids.null_count:
-            ids = ids.fill_null("None")
-        raw = murmur3_x86_32_arrow(ids).astype(np.int64)
-        hashes = raw
-        # composite "shard!doc" ids (rare): '!' is 0x21, a single UTF-8
-        # byte that never occurs inside a multi-byte sequence, so one
-        # vectorized scan of the flat buffer flags the batch; only then
-        # are the affected rows materialized for the spliced hash.  The
-        # root shard uses the composite-spliced hash; the within-shard
-        # offset always uses the full-key murmur3 (the raw batch hash),
-        # matching micro_shard_of.
-        offsets, flat = _utf8_flat(ids)
-        bang = np.flatnonzero(flat == 0x21)
-        if bang.size:
-            rows = np.unique(np.searchsorted(offsets, bang, side="right") - 1)
-            hashes = raw.copy()
-            fixes = [composite_id_hash(ids[int(i)].as_py()) for i in rows]
-            hashes[rows] = np.array(fixes, dtype=np.int64)
-        roots = np.searchsorted(starts_arr, hashes, side="right") - 1
-        micro = roots * per_shard + ((raw & INT_MAX) % per_shard)
-        return pa.array(micro.astype(np.int32), type=pa.int32())
+        return micro_shards_arrow(ids, router)
 
     return _route(F.col(key) if isinstance(key, str) else key)
 

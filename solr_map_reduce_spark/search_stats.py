@@ -60,6 +60,8 @@ import zlib
 import pyspark.sql.functions as F
 from pyspark.sql import Observation, SparkSession
 
+from solr_map_reduce_spark.indexing import read_parquet_pinned
+
 STATS = "_SEARCH_STATS.json"
 VOCAB_DIR = "_vocab"
 VOCAB_META = "_VOCAB_META.json"
@@ -483,7 +485,9 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
         )
         vocab_dir = fs_join(path, f"{VOCAB_DIR}/{field}")
         if migrating:
-            vocab = spark.read.parquet(vocab_dir).select("term", "df")
+            vocab = read_parquet_pinned(spark, vocab_dir, _VOCAB_SCHEMA).select(
+                "term", "df"
+            )
             touched: list[int] | None = None  # whole-dir swap
         else:
             delta = delta.withColumn("bucket", _bucket_expr(n_buckets))
@@ -494,8 +498,7 @@ def prepare_stats_delta(spark: SparkSession, path: str, old_subset, new_subset):
             # explicit schema: planning never opens data-file footers, so
             # untouched buckets are never read even at analysis time
             vocab = (
-                spark.read.schema(_VOCAB_SCHEMA)
-                .parquet(vocab_dir)
+                read_parquet_pinned(spark, vocab_dir, _VOCAB_SCHEMA)
                 .filter(F.col("bucket").isin(touched))
                 .select("term", "df")
             )
@@ -605,16 +608,11 @@ def term_dfs(
     fs = get_fs(path, spark)
     meta = load_vocab_meta(fs, path)
     vocab_dir = fs_join(path, f"{VOCAB_DIR}/{field}")
-    if meta is None:  # legacy unbucketed layout
-        vocab = spark.read.parquet(vocab_dir)
-    else:
+    vocab = read_parquet_pinned(spark, vocab_dir, _VOCAB_SCHEMA)
+    if meta is not None:  # bucketed: prune to the query terms' buckets
         n = int(meta["n_buckets"])
         buckets = sorted({term_bucket(t, n) for t in terms})
-        vocab = (
-            spark.read.schema(_VOCAB_SCHEMA)
-            .parquet(vocab_dir)
-            .filter(F.col("bucket").isin(buckets))
-        )
+        vocab = vocab.filter(F.col("bucket").isin(buckets))
     rows = vocab.filter(F.col("term").isin(list(terms))).select("term", "df").collect()
     out = {t: 0 for t in terms}
     out.update({r["term"]: int(r["df"]) for r in rows})

@@ -2,6 +2,8 @@
 slice (SURVEY §7): ingest → key → sanitize → route → dedup → sorted sharded
 write → read back → C1/C2/C7 checks."""
 
+import json
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -245,6 +247,108 @@ def test_empty_input_build(spark, tmp_path):
     assert idx.count() == 0
     assert idx.get("nope").count() == 0
     assert idx.facet("lang").count() == 0
+    # the pinned read of a dataless artifact: 0 rows, the manifest's columns
+    with open(f"{out}/_INDEX_MANIFEST.json") as f:
+        columns = json.load(f)["columns"]
+    df = read_index(spark, out)
+    assert df.count() == 0
+    assert df.columns == columns + ["shard"]
+
+
+def _no_null(schema):
+    """Field names and types with nullability stripped."""
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def test_manifest_schema_matches_footers_across_mutations(spark, tmp_path):
+    """Every read pins the manifest schema, so after each writer the
+    manifest must describe every data file's physical footer schema — a
+    pinned read of a file whose type drifted can fail or misread.  The
+    batches are deliberately mistyped: narrower (int into a long column)
+    and wider (double into a long column), on static fields, which routing
+    casts to their declared types, and on the dynamic field ``u_l``, which
+    it does not."""
+    import glob
+
+    from solr_map_reduce_spark.indexing import MANIFEST, manifest_schema
+    from solr_map_reduce_spark.schema import DynamicField
+
+    schema = IndexSchema(
+        fields=(
+            Field("id", "string", required=True),
+            Field("text", "text_en"),
+            Field("v", "long"),
+            Field("w", "double"),
+        ),
+        unique_key="id",
+        dynamic_fields=(DynamicField("*_l", "long"),),
+    )
+    job = IndexJob(IndexJobConfig(schema=schema, shards=2, dedup="none"))
+    out = str(tmp_path / "drift_idx")
+
+    def check(step):
+        with open(f"{out}/{MANIFEST}") as f:
+            pinned = manifest_schema(json.load(f))
+        assert pinned is not None, step
+        want = [fv for fv in _no_null(pinned) if fv[0] != "shard"]
+        files = glob.glob(f"{out}/shard=*/*.parquet")
+        assert files, step
+        for path in files:
+            assert _no_null(spark.read.parquet(path).schema) == want, (step, path)
+
+    job.build(
+        spark.createDataFrame(
+            [(f"k{i}", f"alpha {i}", i, i / 2, i) for i in range(20)],
+            "id string, text string, v long, w double, u_l long",
+        ),
+        out,
+    )
+    check("build")
+    job.merge_into(
+        spark.createDataFrame(
+            [("k1", "beta one", 101, 7, 1), ("n1", "gamma", 5, 3, 2)],
+            "id string, text string, v int, w int, u_l int",
+        ),
+        out,
+    )
+    check("merge_into")
+    job.update_fields(
+        spark.createDataFrame([("k2", 42), ("k3", 43)], "id string, v int"), out
+    )
+    check("update_fields set")
+    job.update_fields(
+        spark.createDataFrame([("k2", 1, 2)], "id string, v int, w int"),
+        out,
+        ops={"v": "inc", "w": "inc"},
+    )
+    check("update_fields inc")
+    job.update_fields(
+        spark.createDataFrame([("n9", 9)], "id string, v int"), out, missing="insert"
+    )
+    check("update_fields insert")
+    # a WIDER batch type is cast to the stored one, never written as-is
+    job.update_fields(
+        spark.createDataFrame([("k4", 8.0)], "id string, v double"), out
+    )
+    check("update_fields set wider")
+    job.merge_into(
+        spark.createDataFrame(
+            [("n2", "delta", 6.0, 1.0, 4.0)],
+            "id string, text string, v double, w double, u_l double",
+        ),
+        out,
+    )
+    check("merge_into wider")
+    assert job.delete_where(spark, out, F.col("id") == "k5") == 1
+    check("delete_where")
+    compact(spark, out)
+    check("compact")
+    got = {r["id"]: (r["v"], r["w"]) for r in read_index(spark, out).collect()}
+    assert got["k1"] == (101, 7.0) and got["k2"] == (43, 3.0)
+    assert got["k3"] == (43, 1.5) and got["n9"] == (9, None)
+    assert got["k4"] == (8, 2.0) and got["n2"] == (6, 1.0)
+    assert read_index(spark, out).filter(F.col("id") == "n2").first()["u_l"] == 4
+    assert "k5" not in got and len(got) == 22
 
 
 def test_merge_into_incremental_reindex(spark, sf_dir, tmp_path):

@@ -9,6 +9,7 @@ from solr_map_reduce_spark.operators.routing import (
     INT_MIN,
     ShardRouter,
     composite_id_hash,
+    micro_shards_arrow,
     murmur3_x86_32,
     partition_ranges,
     with_shard_id,
@@ -116,3 +117,19 @@ def test_with_shard_id_composite_parity(spark):
     router = ShardRouter(shards=4, num_partitions=64)
     for k in keys:
         assert got[k] == router.micro_shard_of(k), k
+
+
+def test_arrow_kernel_on_sliced_array():
+    """A sliced Arrow array's data buffer still holds the bytes of the rows
+    outside the slice: a '!' there must neither re-hash a row of the slice
+    nor index past its end."""
+    import pyarrow as pa
+
+    router = ShardRouter(shards=4, num_partitions=8)
+    full = pa.array(["a!x", "p1", "c!w", "p2", "b!y"], type=pa.large_string())
+    sliced = full.slice(1, 3)
+    keys = sliced.to_pylist()
+    copy = pa.array(keys, type=pa.large_string())
+    got = micro_shards_arrow(sliced, router).to_pylist()
+    assert got == micro_shards_arrow(copy, router).to_pylist()
+    assert got == [router.micro_shard_of(k) for k in keys]
